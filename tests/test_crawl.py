@@ -9,6 +9,8 @@ and exact resume-after-kill semantics.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +26,7 @@ from warcit_spark.sources.fixture import (
 
 N_PAGES = 200
 CFG = CrawlConfig(host_budget=12, max_rounds=6, n_salt=4, n_lineage_partitions=8)
+SEEN_BUCKETS = 8  # fixture scale: one small file per bucket per round
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +55,9 @@ def oracle_result(spark, fixture_dfs):
 @pytest.fixture(scope="module")
 def engine_result(spark, fixture_dfs, tmp_path_factory):
     pages, seeds, robots = fixture_dfs
-    state = CrawlState(str(tmp_path_factory.mktemp("crawl_state")))
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("crawl_state")), seen_buckets=SEEN_BUCKETS
+    )
     summaries = run_crawl(spark, state, pages, seeds, robots, CFG)
     return state, summaries
 
@@ -61,8 +66,8 @@ def test_seen_set_matches_oracle(spark, engine_result, oracle_result):
     state, _ = engine_result
     seen = state.read_table(spark, "seen")
     got = {
-        (r.url, r.round, r.reason)
-        for r in seen.select("url", "round", "reason").collect()
+        (r.url, r.round_seen, r.reason)
+        for r in seen.select("url", "round_seen", "reason").collect()
     }
     want = {(u, rnd, reason) for u, (rnd, reason) in oracle_result.seen.items()}
     assert got == want
@@ -159,19 +164,41 @@ def test_robots_denied_host_never_fetched(spark, engine_result):
     assert denied.where(F.col("host") == "www.host3.test").count() > 0
 
 
+class _KilledBeforeMarker(CrawlState):
+    """A driver killed inside ``commit_round(kill_round)``: that round's
+    deltas are all written, its marker never is."""
+
+    kill_round = 2
+
+    def commit_round(self, round_id: int, summary: dict) -> None:
+        if round_id == self.kill_round:
+            raise RuntimeError(f"killed before round {round_id}'s marker")
+        super().commit_round(round_id, summary)
+
+
 def test_resume_exactly(spark, fixture_dfs, tmp_path_factory, engine_result):
-    """Kill-after-round-k resume: partial run + resumed run == one-shot run
-    (SURVEY.md §7.3 #4)."""
+    """Kill-after-round-k and kill-before-marker resume: partial run +
+    killed run + resumed run == one-shot run, row for row (SURVEY.md
+    §7.3 #4) — the killed round's debris must not duplicate seen rows."""
     pages, seeds, robots = fixture_dfs
     root = str(tmp_path_factory.mktemp("crawl_resume"))
 
     partial_cfg = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
-    state2 = CrawlState(root)
+    state2 = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     run_crawl(spark, state2, pages, seeds, robots, partial_cfg)
     assert state2.committed_round() == 1
 
+    killed = _KilledBeforeMarker(root, seen_buckets=SEEN_BUCKETS)
+    with pytest.raises(RuntimeError, match="killed before"):
+        run_crawl(spark, killed, pages, seeds, robots, CFG)
+    assert killed.committed_round() == 1
+    # the killed round's seen partition was written (debris to drop)
+    assert killed.read_table(spark, "seen", upto_round=2).where(
+        F.col("round_seen") == 2
+    ).count() > 0
+
     # resume with a fresh state object (new "driver process")
-    state3 = CrawlState(root)
+    state3 = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     run_crawl(spark, state3, pages, seeds, robots, CFG)
 
     state_full, _ = engine_result
@@ -181,49 +208,17 @@ def test_resume_exactly(spark, fixture_dfs, tmp_path_factory, engine_result):
         assert a.count() == b.count()
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
+    seen = state3.read_table(spark, "seen")
+    assert seen.count() == seen.select("url").distinct().count()
 
 
-def test_bucketed_seen_parity_and_plan(spark, fixture_dfs, engine_result, tmp_path_factory):
-    """seen_buckets>0 (Hive-bucketed seen, the Iceberg bucket(N,url)
-    analog): identical crawl results, and the per-round anti-join scans
-    seen co-partitioned — Bucketed: true, no Exchange on the seen side."""
-    pages, seeds, robots = fixture_dfs
-    root = str(tmp_path_factory.mktemp("crawl_state_bucketed"))
-    state_b = CrawlState(root, seen_buckets=8)
-    run_crawl(spark, state_b, pages, seeds, robots, CFG)
-
-    state_ref, _ = engine_result
-    ref_seen = {
-        (r.url, r.round, r.reason)
-        for r in state_ref.read_table(spark, "seen")
-        .select("url", "round", "reason").collect()
-    }
-    got_seen = {
-        (r.url, r.round_seen, r.reason)
-        for r in state_b.read_table(spark, "seen")
-        .select("url", "round_seen", "reason").collect()
-    }
-    assert got_seen == ref_seen
-
-    ref_order = [
-        (r.round, r.host, r.rank_in_host, r.url)
-        for r in state_ref.read_table(spark, "fetched")
-        .where(F.col("record_type") == "resource")
-        .orderBy("round", "host", "rank_in_host").collect()
-    ]
-    got_order = [
-        (r.round, r.host, r.rank_in_host, r.url)
-        for r in state_b.read_table(spark, "fetched")
-        .where(F.col("record_type") == "resource")
-        .orderBy("round", "host", "rank_in_host").collect()
-    ]
-    assert got_order == ref_order
-
-    # plan audit: anti-join against the bucketed seen table has the seen
-    # scan Bucketed: true with no Exchange between the scan and the join.
+def test_bucketed_seen_parity_and_plan(spark, engine_result):
+    """The per-round anti-join scans the url-bucketed seen table
+    co-partitioned: Bucketed: true, no Exchange on the seen side."""
     # (At fixture scale AQE would broadcast the tiny table and hide the
     # bucketing; force the SMJ path the 10^10-row table would take.)
-    seen = state_b.read_table(spark, "seen")
+    state, _ = engine_result
+    seen = state.read_table(spark, "seen")
     cand = spark.range(50).select(
         F.concat(F.lit("http://probe/"), F.col("id")).alias("url")
     )
@@ -234,12 +229,19 @@ def test_bucketed_seen_parity_and_plan(spark, fixture_dfs, engine_result, tmp_pa
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "Bucketed: true" in plan
-    seen_scan_section = plan[plan.index("LeftAnti"):]
-    # the seen (right) side of the SMJ must go Sort->Filter->FileScan with
-    # no Exchange; the candidate side may exchange freely
-    import re as _re
-    right_side = seen_scan_section[_re.search(r"FileScan parquet [^\n]*seen_b", seen_scan_section).start()-400:]
-    assert "Exchange hashpartitioning(url" not in right_side
+    # committed-round reads prune round_seen=<k> directories
+    assert re.search(r"PartitionFilters: \[[^\]]*round_seen", plan), plan
+    # the seen (right) child of the SMJ must go Sort->Filter->FileScan with
+    # no Exchange; the candidate (left) child may exchange freely
+    lines = plan.splitlines()
+    join = next(i for i, line in enumerate(lines) if "LeftAnti" in line)
+    col = lines[join].index("SortMergeJoin")
+    right = next(
+        i for i in range(join + 1, len(lines)) if lines[i][col : col + 2] == "+-"
+    )
+    right_side = "\n".join(lines[right:])
+    assert "seen_b" in right_side, plan
+    assert "Exchange" not in right_side, plan
 
 
 def test_politeness_annotate_matches_single_window_twin(spark):

@@ -12,7 +12,6 @@ from warcit_spark.operators.joins import (
     MapfileUniquenessError,
     conversions_join,
     mapfile_suffix_join,
-    seen_anti_join,
     strict_check_of,
     verify_mapfile_uniqueness,
 )
@@ -204,12 +203,6 @@ def test_conversions_join_skips_unsuccessful(spark):
     records = spark.createDataFrame([("http://x/v.flv", "r1")], ["url", "rid"])
     out = conversions_join(records, conv).collect()
     assert len(out) == 1 and out[0]["url"] == "http://x/v.flv"
-
-
-def test_seen_anti_join(spark):
-    cand = spark.createDataFrame([("a",), ("b",), ("c",)], ["url"])
-    seen = spark.createDataFrame([("b",)], ["url"])
-    assert {r.url for r in seen_anti_join(cand, seen).collect()} == {"a", "c"}
 
 
 # --------------------------------------------------------- D3 + A2 golden JSON

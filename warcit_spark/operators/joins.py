@@ -297,8 +297,3 @@ def transclusions_join(records: DataFrame, transclusions: DataFrame) -> DataFram
     return records.join(
         F.broadcast(tr.withColumnRenamed("media_url", "url")), on="url", how="inner"
     )
-
-
-def seen_anti_join(candidates: DataFrame, seen: DataFrame, key: str = "url") -> DataFrame:
-    """J5: drop candidates already in the seen set (left_anti)."""
-    return candidates.join(seen.select(key), on=key, how="left_anti")

@@ -10,7 +10,8 @@ One round r (SURVEY.md §3.1 restated for the new engine):
                -> record derivation (resource + index-revisit rows, D1/A4)
                -> link extraction (JVM regex, D4) -> canonicalize
                -> within-round dedup (groupBy max-priority)
-               -> ONE anti-join vs (seen UNION deferred)  (J5)
+               -> anti-join vs (this round's seen delta UNION deferred),
+                  then vs the url-bucketed seen table  (J5)
                -> frontier_{r+1} = deferred UNION new
     writes: seen delta, fetched delta, frontier_{r+1}, lineage; then the
     atomic round-commit marker (plans/state.py).
@@ -62,12 +63,6 @@ class CrawlConfig:
     # small-corpus / un-bucketed-pages mode; a round's selection must fit
     # in executor memory.
     broadcast_fetch: bool = False
-    # Bloom-prefilter the seen anti-join (plans/bloom.py): definitely-new
-    # candidates bypass the join; correctness unchanged (no false
-    # negatives — asserted by tests).  Pays one extra action per round to
-    # build the broadcast bitset, so it is off below ~10^7-row seen sets.
-    use_bloom: bool = False
-    bloom_bits: int = 1 << 24
     extra: dict = field(default_factory=dict)
 
 
@@ -377,49 +372,26 @@ def crawl_round(
         )
         .withColumn("round_seen", F.lit(round_id))
     )
-    seen_all = (
-        seen_prev.select("url").unionByName(seen_delta.select("url"))
-        if seen_prev is not None
-        else seen_delta.select("url")
-    )
-    if state.seen_buckets > 0 and not cfg.use_bloom:
-        # bucketed-seen layout: keep the big seen table OUT of the union
-        # (a union would destroy its bucketing) and anti-join it
-        # separately — the seen scan is co-partitioned (Bucketed: true,
-        # zero Exchange on the seen side); only round-sized frames
-        # (candidates, this round's delta, deferred) ever shuffle, at
-        # O(delta), never O(|seen|).  This is what survives 10^10 URLs.
-        round_sized = seen_delta.select("url").unionByName(deferred.select("url"))
-        survivors = deduped.join(round_sized, on="url", how="left_anti")
-        if seen_prev is not None:
-            # merge-pin: the seen side must NEVER be the broadcast build
-            # side — the same compressed-stats hazard as the fetch join
-            # (parquet FileScans report zstd/snappy bytes, so a
-            # multi-hundred-MB decompressed seen set slips under
-            # autoBroadcastJoinThreshold and every round pays an
-            # O(|seen|) single-threaded broadcast build that only grows).
-            # Pinned to sort-merge the join uses the bucketed layout
-            # (Bucketed: true, zero Exchange on the seen side) and was
-            # ALSO measured faster locally at 2.4M seen rows (1.3s vs
-            # 1.9s broadcast).
-            survivors = survivors.join(
-                seen_prev.select("url").hint("merge"), on="url", how="left_anti"
-            )
-    else:
-        # one anti-join against (seen ∪ deferred) instead of two passes
-        not_new = seen_all.unionByName(deferred.select("url"))
-        if cfg.use_bloom:
-            from warcit_spark.plans.bloom import (
-                bloom_prefiltered_anti_join,
-                build_bloom,
-            )
-
-            bloom = build_bloom(not_new, "url", n_bits=cfg.bloom_bits)
-            survivors = bloom_prefiltered_anti_join(
-                deduped, not_new, bloom.tobytes(), key="url", n_bits=cfg.bloom_bits
-            )
-        else:
-            survivors = deduped.join(not_new, on="url", how="left_anti")
+    # keep the big seen table OUT of any union (a union would destroy its
+    # bucketing) and anti-join it separately: the seen scan is
+    # co-partitioned (Bucketed: true, zero Exchange on the seen side); only
+    # round-sized frames (candidates, this round's delta, deferred) ever
+    # shuffle, at O(delta), never O(|seen|).  This is what survives 10^10
+    # URLs.
+    round_sized = seen_delta.select("url").unionByName(deferred.select("url"))
+    survivors = deduped.join(round_sized, on="url", how="left_anti")
+    if seen_prev is not None:
+        # merge-pin: the seen side must NEVER be the broadcast build side —
+        # the same compressed-stats hazard as the fetch join (parquet
+        # FileScans report zstd/snappy bytes, so a multi-hundred-MB
+        # decompressed seen set slips under autoBroadcastJoinThreshold and
+        # every round pays an O(|seen|) single-threaded broadcast build
+        # that only grows).  Pinned to sort-merge the join uses the
+        # bucketed layout and was ALSO measured faster locally at 2.4M seen
+        # rows (1.3s vs 1.9s broadcast).
+        survivors = survivors.join(
+            seen_prev.select("url").hint("merge"), on="url", how="left_anti"
+        )
     new_urls = (
         survivors
         .select(
@@ -515,7 +487,7 @@ def run_crawl(
     atomic; any uncommitted debris is dropped and the round re-runs
     idempotently (SURVEY.md §7.3 #4)."""
     cfg = cfg or CrawlConfig()
-    state.drop_uncommitted()
+    state.drop_uncommitted(spark)
     start_round = state.committed_round() + 1
     if start_round == 0:
         state.write_delta(canonical_seed_frontier(seeds), "frontier", 0)

@@ -15,6 +15,10 @@ marker, preserving every semantic the engine relies on:
   without a marker is invisible and is simply re-run on resume.
 - **partition pruning**: ``round`` is a physical partition column, so
   ``read_table(upto_round=k)`` prunes files without touching newer data.
+- **seen layout**: ``seen`` is one url-bucketed table partitioned by
+  ``round_seen`` (the no-Iceberg analog of ``bucket(N, url)`` plus a round
+  partition): the anti-join scans it co-partitioned, and an uncommitted
+  round is a partition directory that resume deletes like any other delta.
 - **lineage**: per-(round, partition) counters are a table like any other;
   the lineage delta doubles as the round's audit record.
 
@@ -34,31 +38,34 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = ("frontier", "seen", "fetched", "lineage")
+from pyspark.sql import functions as F
 
 SEEN_COLS = ("url", "host", "reason", "round_seen")
+
+# State tables are engine-internal round deltas re-read within the same
+# crawl, not user-facing outputs: favor write+read CPU over ratio instead
+# of the session-wide zstd used for published parquet.
+DELTA_CODEC = "snappy"
+
+# Session conf that decides, at CREATE time, whether a table's partitions
+# are tracked in the catalog (see CrawlState._ensure_seen_table).
+_MANAGE_PARTITIONS = "spark.sql.hive.manageFilesourcePartitions"
 
 
 @dataclass
 class CrawlState:
     root: str
-    # >0: the seen table is written url-hash-bucketed (Hive-style bucketed
-    # parquet, the no-Iceberg analog of ``bucket(N, url)``), so the
-    # per-round anti-join scans seen co-partitioned — ZERO exchange on the
-    # seen side; only the O(round-delta) candidate side shuffles.  This is
-    # the 10^10-URL layout: without it every round re-shuffles the full
-    # seen set.  0 = plain round-delta parquet (fixture scale).
-    seen_buckets: int = 0
-    # Codec for the state tables.  These are engine-internal round deltas
-    # re-read within the same crawl, not user-facing outputs, so the
-    # default favors write+read CPU over ratio (snappy) instead of the
-    # session-wide zstd used for published parquet.  Parameterised for
-    # clusters where state lives on slow/remote storage and ratio wins:
-    # SPARK_GRAFT_STATE_CODEC=zstd.
-    delta_codec: str = os.environ.get("SPARK_GRAFT_STATE_CODEC", "snappy")
+    # Buckets of the seen table (Hive-style bucketed parquet, hashed on
+    # url), so the per-round anti-join scans seen co-partitioned — ZERO
+    # exchange on the seen side; only the O(round-delta) candidate side
+    # shuffles.  Without it every round re-shuffles the full seen set.
+    # Each round writes one file per bucket: size it to the cluster
+    # (64 in bench.py), smaller at fixture scale.
+    seen_buckets: int = 64
 
     def __post_init__(self) -> None:
+        if self.seen_buckets < 1:
+            raise ValueError(f"seen_buckets must be >= 1, got {self.seen_buckets}")
         os.makedirs(self.root, exist_ok=True)
 
     # ---------------------------------------------------------------- commits
@@ -100,30 +107,39 @@ class CrawlState:
         return os.path.join(self.root, "seen_bucketed")
 
     def _ensure_seen_table(self, spark: SparkSession) -> str:
-        """Register the bucketed seen table in this session's catalog
-        (idempotent; re-registers over existing files after a restart)."""
+        """Register the seen table in this session's catalog (idempotent;
+        re-registers over existing files after a restart or a copy).
+
+        The table is created with catalog partition tracking OFF: reads
+        list the ``round_seen=<k>`` directories (still pruned by
+        ``round_seen <= k``), so files written before registration are
+        visible without a partition repair, and an append never runs the
+        implicit add-partition ``refreshTable`` that would invalidate
+        in-flight plans (see :meth:`_write_seen_bucketed`).
+        """
         name = self._seen_table_name()
-        if not spark.catalog.tableExists(name) and os.path.isdir(
-            self._seen_location()
-        ):
+        if spark.catalog.tableExists(name):
+            return name
+        prev = spark.conf.get(_MANAGE_PARTITIONS, "true")
+        spark.conf.set(_MANAGE_PARTITIONS, "false")
+        try:
             spark.sql(
-                f"CREATE TABLE {name} "
+                f"CREATE TABLE IF NOT EXISTS {name} "
                 "(url STRING, host STRING, reason STRING, round_seen INT) "
-                "USING PARQUET CLUSTERED BY (url) SORTED BY (url) "
+                "USING PARQUET PARTITIONED BY (round_seen) "
+                "CLUSTERED BY (url) SORTED BY (url) "
                 f"INTO {self.seen_buckets} BUCKETS "
                 f"LOCATION '{self._seen_location()}'"
             )
+        finally:
+            spark.conf.set(_MANAGE_PARTITIONS, prev)
         return name
 
-    def _write_seen_bucketed(
-        self, df: DataFrame, round_id: int, refresh: bool = True
-    ) -> None:
-        """Append one round's seen delta, bucketed by url.
-
-        Append-only + duplicate-tolerant: the anti-join treats seen as a
-        set, and reads filter ``round_seen <= committed``, so a crashed
-        (uncommitted) append needs no cleanup — re-running the round just
-        appends the same rows again, invisibly.
+    def _write_seen_bucketed(self, df: DataFrame, refresh: bool = True) -> None:
+        """Append one round's seen delta as partition ``round_seen=<k>``,
+        bucketed by url.  Reads filter ``round_seen <= committed``, and
+        :meth:`drop_uncommitted` deletes the partitions of uncommitted
+        rounds, so a re-run round never duplicates rows.
 
         ``refresh=False`` defers the catalog refresh to
         :meth:`refresh_seen` — REQUIRED when other jobs whose plans
@@ -145,10 +161,11 @@ class CrawlState:
             df.select(*SEEN_COLS)
             .repartition(self.seen_buckets, "url")
             .write.format("parquet")
+            .partitionBy("round_seen")
             .bucketBy(self.seen_buckets, "url")
             .sortBy("url")
             .option("path", self._seen_location())
-            .option("compression", self.delta_codec)
+            .option("compression", DELTA_CODEC)
             .mode("append")
             .saveAsTable(name)
         )
@@ -156,11 +173,9 @@ class CrawlState:
             spark.catalog.refreshTable(name)
 
     def refresh_seen(self, spark: SparkSession) -> None:
-        """Publish a deferred bucketed-seen append to this session's
-        catalog (no-op for the unbucketed layout)."""
-        if self.seen_buckets > 0 and spark.catalog.tableExists(
-            self._seen_table_name()
-        ):
+        """Publish a deferred seen append (or a dropped partition) to this
+        session's catalog."""
+        if spark.catalog.tableExists(self._seen_table_name()):
             spark.catalog.refreshTable(self._seen_table_name())
 
     def write_delta(
@@ -172,16 +187,16 @@ class CrawlState:
         The ``round`` column, if present, is carried by the partition
         directory name (``round=<k>``) and re-inferred at read time, so it
         is stripped from the physical files.  ``refresh`` is forwarded to
-        the bucketed-seen append (see :meth:`_write_seen_bucketed`).
+        the seen append (see :meth:`_write_seen_bucketed`).
         """
-        if table == "seen" and self.seen_buckets > 0:
-            self._write_seen_bucketed(df, round_id, refresh=refresh)
+        if table == "seen":
+            self._write_seen_bucketed(df, refresh=refresh)
             return
         if "round" in df.columns:
             df = df.drop("round")
-        df.write.mode("overwrite").option(
-            "compression", self.delta_codec
-        ).parquet(self.delta_path(table, round_id))
+        df.write.mode("overwrite").option("compression", DELTA_CODEC).parquet(
+            self.delta_path(table, round_id)
+        )
 
     def read_round_delta(
         self, spark: SparkSession, table: str, round_id: int
@@ -207,12 +222,10 @@ class CrawlState:
             upto_round = self.committed_round()
         if upto_round < 0:
             return None
-        if table == "seen" and self.seen_buckets > 0:
+        if table == "seen":
             if not os.path.isdir(self._seen_location()):
                 return None
             name = self._ensure_seen_table(spark)
-            from pyspark.sql import functions as F
-
             return spark.table(name).where(F.col("round_seen") <= upto_round)
         base = os.path.join(self.root, table)
         if not os.path.isdir(base):
@@ -229,20 +242,22 @@ class CrawlState:
         )
         return df
 
-    def drop_uncommitted(self) -> None:
-        """Remove delta dirs newer than the last committed round (crash
+    def drop_uncommitted(self, spark: SparkSession) -> None:
+        """Remove deltas newer than the last committed round (crash
         debris); called on resume before re-running the next round."""
         committed = self.committed_round()
-        for table in TABLES:
+        debris = [
             # round r legitimately *produces* the frontier delta for r+1,
             # so the frontier table keeps one delta beyond the marker
-            keep_upto = committed + 1 if table == "frontier" else committed
-            base = os.path.join(self.root, table)
+            (os.path.join(self.root, "frontier"), "round=", committed + 1),
+            (os.path.join(self.root, "fetched"), "round=", committed),
+            (os.path.join(self.root, "lineage"), "round=", committed),
+            (self._seen_location(), "round_seen=", committed),
+        ]
+        for base, prefix, keep_upto in debris:
             if not os.path.isdir(base):
                 continue
             for name in os.listdir(base):
-                if not name.startswith("round="):
-                    continue
-                r = int(name.split("=", 1)[1])
-                if r > keep_upto:
+                if name.startswith(prefix) and int(name[len(prefix):]) > keep_upto:
                     shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        self.refresh_seen(spark)
