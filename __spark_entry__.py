@@ -150,12 +150,13 @@ def _exact_money_sum(x, s: int):
 
     Equivalence argument, verified output-identical vs the decimal form on
     every fixture sf (0.001/0.01/0.1/1.0):
-    - per row, ``floor(x*10^s + 0.5)`` = the decimal cast's HALF_UP at scale
-      s for non-negative x whose exact value is a 10^-s-grid rational (all
-      fixture money columns are exact 2-decimals; products of 2-decimal
-      factors are exact 4-/6-decimal rationals), because the double-multiply
-      error (~1e-11 relative) never moves the product across a .5 boundary
-      that sits >= 1e-5 away from the grid.
+    - per row, ``signum(x) * floor(|x|*10^s + 0.5)`` = the decimal cast's
+      HALF_UP (half away from zero) at scale s for any x whose exact value
+      is a 10^-s-grid rational (all fixture money columns are exact
+      2-decimals; products of 2-decimal factors are exact 4-/6-decimal
+      rationals), because the double-multiply error (~1e-11 relative)
+      never moves the product across a .5 boundary that sits >= 1e-5 away
+      from the grid.
     - the long sum is exact (capacity 9.2e18 >= micro-units up to ~sf30;
       beyond that switch the cast back to decimal — the sums themselves,
       not this rendering, overflow decimal(18,s) rows far earlier).
@@ -163,7 +164,10 @@ def _exact_money_sum(x, s: int):
       double the oracle's pandas path sees is the same nearest-double of
       S/10^s that the decimal-sum form produced.
     """
-    units = (x * F.lit(float(10**s)) + F.lit(0.5)).cast("long")
+    # HALF_UP rounds the magnitude: floor(|x|*10^s + 0.5), sign restored
+    units = F.signum(x).cast("long") * F.floor(
+        F.abs(x) * F.lit(float(10**s)) + F.lit(0.5)
+    )
     total = F.sum(units).cast("decimal(38,0)") / F.lit(10**s)
     return F.round(total.cast("double"), s)
 

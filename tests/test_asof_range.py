@@ -1,5 +1,4 @@
-"""As-of and range join operators: window form vs pandas merge_asof form
-vs hand-computed golden cases."""
+"""As-of and range join operators vs hand-computed golden cases."""
 
 from __future__ import annotations
 
@@ -8,7 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from warcit_spark.operators.asof import asof_join, asof_join_pandas, range_join
+from warcit_spark.operators.asof import asof_join, range_join
 
 
 def ts(s):
@@ -47,13 +46,6 @@ def test_asof_window_golden(spark, quotes_trades):
     out = asof_join(trades, quotes, on="t", by="sym", right_cols=["quote"])
     got = {r.trade_id: r.quote for r in out.collect()}
     assert got == GOLDEN
-
-
-def test_asof_pandas_matches_window(spark, quotes_trades):
-    trades, quotes = quotes_trades
-    a = asof_join(trades, quotes, on="t", by="sym", right_cols=["quote"])
-    b = asof_join_pandas(trades, quotes, on="t", by="sym", right_cols=["quote"])
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
 
 
 def test_asof_on_testdata(spark, sf_dir):

@@ -355,13 +355,13 @@ def test_pagerank_scores_drive_crawl_order(spark, fixture_dfs, tmp_path_factory)
     the engine's own link graph feed the frontier as seed priorities, and
     the round-0 per-host fetch order follows them exactly."""
     from warcit_spark.operators.graph import pagerank
-    from warcit_spark.operators.links import extract_links
+    from warcit_spark.operators.links import hrefs_expr, resolve_hrefs
     from warcit_spark.plans.crawl import CrawlConfig, run_crawl
     from warcit_spark.plans.state import CrawlState
 
     pages, _seeds, robots = fixture_dfs
-    edges = extract_links(
-        pages.withColumn("priority", F.lit(0.0)), carry=()
+    edges = resolve_hrefs(
+        pages.select("url", hrefs_expr(F.col("html")).alias("_hrefs")), carry=()
     ).select(F.col("url").alias("src"), F.col("link").alias("dst"))
     pr = pagerank(edges, iters=3)
 

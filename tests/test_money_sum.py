@@ -3,11 +3,8 @@ must render bit-identically to the decimal-cast sum it replaced in
 q1/q3/j4/w3 — the oracle gate checks this end-to-end per query; this
 pins the helper itself on boundary-ish money values."""
 
-import sys
-
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as em
 
 
@@ -20,6 +17,7 @@ def test_exact_money_sum_matches_decimal_form(spark):
         1.0, 50.0, 17.32, 17.33, 0.01, 0.0, 901.82, 100000.99,
         0.005, 12.345, 99999.995,          # off-grid / half-boundary inputs
         33.33, 66.67, 0.1, 0.2, 0.3,       # classic binary-representation cases
+        -0.006, -17.325, -0.005, -12.345,  # negatives round half away from zero
     ]
     rows = [(i % 3, v) for i, v in enumerate(vals * 997)]  # ~16k rows, 3 groups
     df = spark.createDataFrame(rows, "g int, v double")

@@ -2,18 +2,12 @@
 notes the reference has none either; training-data pipelines need them for
 point-in-time feature lookup).
 
-Two implementations, one semantics:
-
-- :func:`asof_join` (default): the **union-window** formulation — pure
-  DataFrame ops, no Python.  Tag left/right rows, union them, and for each
-  left row take the last right row at or before it via
-  ``last(right_payload, ignorenulls=True)`` over a window ordered by
-  (time, right-first tiebreak).  One shuffle on (key), no row explosion,
-  scales to arbitrarily many right rows per key.
-- :func:`asof_join_pandas`: grouped ``applyInPandas`` with
-  ``pandas.merge_asof`` per key group — the Arrow-vectorized fallback for
-  semantics the window form can't express (tolerance windows, nearest
-  rather than backward).
+As-of join: :func:`asof_join` is the **union-window** formulation — pure
+DataFrame ops, no Python.  Tag left/right rows, union them, and for each
+left row take the last right row at or before it via
+``last(right_payload, ignorenulls=True)`` over a window ordered by (time,
+right-first tiebreak).  One shuffle on (key), no row explosion, scales to
+arbitrarily many right rows per key.  Only the backward direction exists.
 
 Range join: :func:`range_join` buckets the range key so the theta join
 becomes an equi-join on (key, bucket) + a residual filter — the standard
@@ -76,54 +70,6 @@ def asof_join(
         *[F.col("_rlast")[c].alias(c) for c in right_cols],
     )
     return out
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str] | None = None,
-    tolerance=None,
-) -> DataFrame:
-    """merge_asof per key group via applyInPandas (Arrow batches)."""
-    import pandas as pd
-
-    right_cols = right_cols or [c for c in right.columns if c not in (on, by)]
-    l_cols = list(left.columns)
-    out_fields = [
-        f"`{c}` {left.schema[c].dataType.simpleString()}" for c in l_cols
-    ] + [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in right_cols]
-    out_schema = ", ".join(out_fields)
-
-    l_tag = left.withColumn("_side", F.lit("l"))
-    r_tag = right.select(
-        by, on, *right_cols
-    ).withColumn("_side", F.lit("r"))
-    cols = set(l_tag.columns) | set(r_tag.columns)
-    l_full = l_tag.select(
-        *[F.col(c) if c in l_tag.columns else F.lit(None).alias(c) for c in cols]
-    )
-    r_full = r_tag.select(
-        *[F.col(c) if c in r_tag.columns else F.lit(None).alias(c) for c in cols]
-    )
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["_side"] == "l"][l_cols].sort_values(on)
-        rpdf = pdf[pdf["_side"] == "r"][[by, on, *right_cols]].sort_values(on)
-        if lpdf.empty:
-            return pd.DataFrame(columns=l_cols + right_cols)
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=[by]),
-            on=on,
-            direction="backward",
-            tolerance=tolerance,
-            suffixes=("", "_r"),
-        )
-        return merged[l_cols + right_cols]
-
-    return l_full.unionByName(r_full).groupBy(by).applyInPandas(merge, out_schema)
 
 
 def range_join(

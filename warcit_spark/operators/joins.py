@@ -1,5 +1,6 @@
-"""Lookup joins J1-J3 (SURVEY.md §2.3) — broadcast joins with the
-reference's match semantics.
+"""Lookup joins J1-J2 (SURVEY.md §2.3) — broadcast joins with the
+reference's match semantics.  J3, the transclusions equi-join
+(converter.py:232-238), runs inline in plans/warcit_pipeline.py.
 
 - J1 mapfile suffix-match join (warcit/warcit.py:332-342): probe each file
   against mapfile rows by ``filename.endswith(row['file'])``; the FIRST row
@@ -7,13 +8,11 @@ reference's match semantics.
   hard job failure (``sys.exit(1)`` in the reference).
 - J2 conversions equi-join (converter.py:205-216): inner join on source
   url, keep only ``success`` rows (unsuccessful are warn+skip).
-- J3 transclusions equi-join (converter.py:232-238): inner join on media
-  url; rows missing the contain-url are skipped.
 
 Physical shapes: J1 is an in-row first-match scan over an array literal of
 the mapfile (zero shuffle; the mapfile side is small by construction — the
-reference materializes it fully in RAM, warcit/warcit.py:303-304).  J2/J3
-are broadcast hash equi-joins.
+reference materializes it fully in RAM, warcit/warcit.py:303-304).  J2 is
+a broadcast hash equi-join.
 """
 
 from __future__ import annotations
@@ -286,14 +285,4 @@ def conversions_join(records: DataFrame, conversions: DataFrame) -> DataFrame:
     conv = conversions.where(F.col("success"))
     return records.join(
         F.broadcast(conv.withColumnRenamed("source_url", "url")), on="url", how="inner"
-    )
-
-
-def transclusions_join(records: DataFrame, transclusions: DataFrame) -> DataFrame:
-    """J3: per media url, its transclusion entries (broadcast inner
-    equi-join; rows without a contain url were dropped at load,
-    converter.py:234-236)."""
-    tr = transclusions.where(F.col("contain_url").isNotNull())
-    return records.join(
-        F.broadcast(tr.withColumnRenamed("media_url", "url")), on="url", how="inner"
     )

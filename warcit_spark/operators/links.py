@@ -1,50 +1,35 @@
 """Link extraction + resolution (SURVEY.md §2.5 D4 — new-engine operator).
 
 The reference never extracts links (its inputs are enumerated files); the
-frontier engine discovers URLs from fetched HTML.  Two implementations:
+frontier engine discovers URLs from fetched HTML.  One extractor and one
+resolver, both pure JVM expressions:
 
-- :func:`extract_links` — the hot path: ``regexp_extract_all`` on the JVM
-  (whole-stage codegen, zero Python) followed by ``explode``.
-- :func:`extract_links_batch` — the pandas/Arrow variant demanded by the
-  north-star for full HTML parsing: lxml per Arrow record batch when lxml
-  is installed, else a vectorized ``pandas.str.extractall`` fallback
-  (still batch-at-a-time C code, never per-row Python).  Used via
-  ``mapInPandas``; schema-compatible with the expression path.
+- :func:`hrefs_expr` — ``regexp_extract_all`` of :data:`HREF_PATTERN` over
+  the decoded body (whole-stage codegen, zero Python); the crawl round
+  fuses it into its fetch projection.
+- :func:`resolve_hrefs` — explode + resolve against the parent URL, whose
+  scheme/authority/directory are parsed once per page before the explode.
+  :func:`anchor_text_agg` resolves its anchors through the same two steps.
 
-Resolution handles absolute http(s), root-relative, and directory-relative
-hrefs; other schemes (mailto:, javascript:, data:) and intra-page fragments
-resolve to NULL and are filtered.
+Resolution mirrors the sequential oracle's ``resolve_link``
+(tests/oracle.py): the href is stripped of the whitespace Python's
+``str.strip()`` strips; absolute http(s), root-relative and
+directory-relative hrefs resolve; other schemes (mailto:, javascript:,
+data:), intra-page fragments and empty hrefs resolve to NULL and are
+filtered.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HREF_PATTERN = r'<a\s[^>]*href="([^"]*)"'
 
-
-def resolve_link_expr(parent_url: Column, href: Column) -> Column:
-    """Resolve an href against its parent URL; NULL for non-crawlable."""
-    scheme = F.try_parse_url(parent_url, F.lit("PROTOCOL"))
-    auth = F.try_parse_url(parent_url, F.lit("AUTHORITY"))
-    base = F.concat(scheme, F.lit("://"), auth)
-    parent_dir = F.regexp_replace(
-        F.coalesce(F.try_parse_url(parent_url, F.lit("PATH")), F.lit("/")),
-        "[^/]*$",
-        "",
-    )
-    h = F.trim(href)
-    return (
-        F.when(h.rlike("^https?://"), h)
-        .when(h.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))  # other schemes
-        .when((h == "") | h.startswith("#"), F.lit(None))
-        .when(h.startswith("/"), F.concat(base, h))
-        .otherwise(F.concat(base, parent_dir, h))
-    )
+# every character Python's str.isspace() accepts (the highest is U+3000):
+# F.trim strips only U+0020, but HREF_PATTERN's [^"]* also captures tabs,
+# newlines and Unicode spaces around the href
+_PY_WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
 
 
 def hrefs_expr(html_col: Column) -> Column:
@@ -58,6 +43,39 @@ def hrefs_expr(html_col: Column) -> Column:
     )
 
 
+def _parent_parts(url: Column) -> list[Column]:
+    """``_base`` (scheme://authority) and ``_dir`` (path up to its last
+    '/') of a parent URL.  Select them in a projection of their own BEFORE
+    the explode: Spark evaluates the other expressions of a select that
+    also explodes above its Generate, i.e. per link, re-parsing the same
+    parent ~links-per-page times (three try_parse_url calls each — at CC
+    weight ~75 redundant URI parses per page; guide §1.2 per-task work)."""
+    path = F.try_parse_url(url, F.lit("PATH"))
+    return [
+        F.concat(
+            F.try_parse_url(url, F.lit("PROTOCOL")),
+            F.lit("://"),
+            F.try_parse_url(url, F.lit("AUTHORITY")),
+        ).alias("_base"),
+        F.regexp_replace(
+            F.when(path != "", path).otherwise(F.lit("/")), "[^/]*$", ""
+        ).alias("_dir"),
+    ]
+
+
+def _resolve(href: Column, base: Column, parent_dir: Column) -> Column:
+    """Resolve an href against its parent's ``_base``/``_dir``; NULL for
+    non-crawlable hrefs."""
+    h = F.btrim(href, F.lit(_PY_WHITESPACE))
+    return (
+        F.when(h.rlike("^https?://"), h)
+        .when(h.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))  # other schemes
+        .when((h == "") | h.startswith("#"), F.lit(None))
+        .when(h.startswith("/"), F.concat(base, h))
+        .otherwise(F.concat(base, parent_dir, h))
+    )
+
+
 def resolve_hrefs(
     pages: DataFrame,
     hrefs_col: str = "_hrefs",
@@ -65,131 +83,25 @@ def resolve_hrefs(
     carry: tuple[str, ...] = ("priority",),
 ) -> DataFrame:
     """(url, *carry, link) from a PRE-computed ``array<string>`` hrefs
-    column (see :func:`hrefs_expr`) — explode + resolve, pure JVM.
-
-    The parent URL's scheme/authority/directory are computed ONCE PER PAGE
-    *before* the explode: resolving them per exploded link would re-parse
-    the same parent ~links-per-page times (three try_parse_url calls each
-    — at CC weight that was ~75 redundant URI parses per page, the
-    majority of the link phase; guide §1.2 per-task work).
-    """
-    scheme = F.try_parse_url(F.col(url_col), F.lit("PROTOCOL"))
-    auth = F.try_parse_url(F.col(url_col), F.lit("AUTHORITY"))
-    parent_dir = F.regexp_replace(
-        F.coalesce(F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("/")),
-        "[^/]*$",
-        "",
-    )
+    column (see :func:`hrefs_expr`) — explode + resolve, pure JVM."""
     exploded = pages.select(
         F.col(url_col).alias("url"),
         *[F.col(c) for c in carry],
-        F.concat(scheme, F.lit("://"), auth).alias("_base"),
-        parent_dir.alias("_dir"),
-        F.explode(F.col(hrefs_col)).alias("_href"),
+        *_parent_parts(F.col(url_col)),
+        F.col(hrefs_col).alias("_hrefs"),
+    ).select(
+        "url", *carry, "_base", "_dir", F.explode("_hrefs").alias("_href")
     )
-    h = F.trim(F.col("_href"))
-    link = (
-        F.when(h.rlike("^https?://"), h)
-        .when(h.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))  # other schemes
-        .when((h == "") | h.startswith("#"), F.lit(None))
-        .when(h.startswith("/"), F.concat(F.col("_base"), h))
-        .otherwise(F.concat(F.col("_base"), F.col("_dir"), h))
-    )
+    link = _resolve(F.col("_href"), F.col("_base"), F.col("_dir"))
     return exploded.select(
         "url", *carry, link.alias("link")
     ).where(F.col("link").isNotNull())
 
 
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    carry: tuple[str, ...] = ("priority",),
-) -> DataFrame:
-    """(url, *carry, link) — one row per resolved outlink.  Pure JVM."""
-    with_hrefs = pages.select(
-        F.col(url_col).alias("url"),
-        *[F.col(c) for c in carry],
-        hrefs_expr(F.col(html_col)).alias("_hrefs"),
-    )
-    return resolve_hrefs(with_hrefs, carry=carry)
-
-
-def _extract_hrefs_lxml(html_bytes: pd.Series) -> pd.Series:
-    """lxml path: list of raw hrefs per document (batched, C-side)."""
-    from lxml import html as lhtml  # noqa: import-gated; absent in sandbox
-
-    def one(b):
-        if b is None or len(b) == 0:
-            return []
-        try:
-            tree = lhtml.fromstring(b)
-        except Exception:
-            return []
-        return [
-            link
-            for el, attr, link, _pos in tree.iterlinks()
-            if attr == "href" and el.tag == "a"
-        ]
-
-    return html_bytes.map(one)
-
-
-def _extract_hrefs_regex(html_bytes: pd.Series) -> pd.Series:
-    """Vectorized fallback: pandas str.extractall (C regex engine)."""
-    s = html_bytes.map(
-        lambda b: b.decode("utf-8", "replace") if b is not None else ""
-    )
-    matches = s.str.extractall(HREF_PATTERN)[0]
-    grouped = matches.groupby(level=0).agg(list)
-    return grouped.reindex(s.index, fill_value=None).map(
-        lambda v: v if isinstance(v, list) else []
-    )
-
-
-def extract_links_batch(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    carry: tuple[str, ...] = ("priority",),
-) -> DataFrame:
-    """mapInPandas variant: lxml per Arrow batch if available, else the
-    vectorized regex fallback.  Same output schema as extract_links."""
-    try:
-        import lxml  # noqa: F401
-
-        extractor = _extract_hrefs_lxml
-    except ImportError:
-        extractor = _extract_hrefs_regex
-
-    carry_fields = ", ".join(
-        f"{c} {pages.schema[c].dataType.simpleString()}" for c in carry
-    )
-    out_schema = f"url string, {carry_fields}, _href string" if carry else "url string, _href string"
-
-    cols = [url_col, html_col, *carry]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hrefs = extractor(pdf[html_col])
-            out = pdf[[url_col, *carry]].rename(columns={url_col: "url"})
-            out = out.assign(_href=hrefs).explode("_href")
-            out = out[out["_href"].notna()]
-            yield out
-
-    exploded = pages.select(*cols).mapInPandas(fn, out_schema)
-    link = resolve_link_expr(F.col("url"), F.col("_href"))
-    return exploded.select("url", *carry, link.alias("link")).where(
-        F.col("link").isNotNull()
-    )
-
-
 # ------------------------------------------------------------- anchor text
 # anchor pattern: href + the a-element's DIRECT text ('[^<]*</a>' demands
-# text-only content, so anchors wrapping nested markup are skipped by this
-# regex hot path entirely — the full-fidelity parse is the lxml batch twin
-# `extract_links_batch`; directly-empty anchors DO match and count as
-# textless inlinks)
+# text-only content, so anchors wrapping nested markup are not matched;
+# directly-empty anchors DO match and count as textless inlinks)
 ANCHOR_PATTERN = r'<a\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
@@ -209,12 +121,12 @@ def anchor_text_agg(
 
     Scale shape: extraction is TWO ``regexp_extract_all`` over the SAME
     pattern (groups 1/2 — indexes align by construction) fused in one
-    row-local projection, ``arrays_zip`` + one explode; resolution and
-    canonicalization are the frontier's own exprs (links stay joinable
-    against the URL-seen set); then a (target, text) groupBy feeding a
-    target groupBy — both map-side combined, no window over the full
-    explode.  Anchor dedup-per-page is NOT applied (repeat anchors are
-    signal), matching WAT semantics.
+    row-local projection with the per-page parent parse, ``arrays_zip`` +
+    one explode; resolution and canonicalization are the frontier's own
+    exprs (links stay joinable against the URL-seen set); then a
+    (target, text) groupBy feeding a target groupBy — both map-side
+    combined, no window over the full explode.  Anchor dedup-per-page is
+    NOT applied (repeat anchors are signal), matching WAT semantics.
     """
     from warcit_spark.functions.urls import canonicalize_url_expr
 
@@ -224,19 +136,14 @@ def anchor_text_agg(
         F.regexp_extract_all(html_txt, F.lit(ANCHOR_PATTERN), 2).alias("text"),
     )
     exploded = pages.select(
-        F.col(url_col).alias("url"), F.explode(pairs).alias("_p")
-    ).select(
-        "url",
-        F.col("_p")["href"].alias("_href"),
-        F.trim(
-            F.regexp_replace(F.col("_p")["text"], r"\s+", " ")
-        ).alias("anchor"),
-    )
+        *_parent_parts(F.col(url_col)), pairs.alias("_pairs")
+    ).select("_base", "_dir", F.explode("_pairs").alias("_p"))
     target = canonicalize_url_expr(
-        resolve_link_expr(F.col("url"), F.col("_href"))
+        _resolve(F.col("_p")["href"], F.col("_base"), F.col("_dir"))
     )
+    anchor = F.trim(F.regexp_replace(F.col("_p")["text"], r"\s+", " "))
     per_text = (
-        exploded.select(target.alias("target_url"), "anchor")
+        exploded.select(target.alias("target_url"), anchor.alias("anchor"))
         .where(F.col("target_url").isNotNull())
         .groupBy("target_url", "anchor")
         .agg(F.count(F.lit(1)).alias("_c"))

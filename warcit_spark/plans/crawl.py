@@ -29,7 +29,7 @@ comparable lineage for the scaling-efficiency evidence.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +63,6 @@ class CrawlConfig:
     # small-corpus / un-bucketed-pages mode; a round's selection must fit
     # in executor memory.
     broadcast_fetch: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def canonical_seed_frontier(seeds: DataFrame) -> DataFrame:

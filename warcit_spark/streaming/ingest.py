@@ -3,10 +3,11 @@
 The reference is single-pass batch and the crawl loop is iterative batch;
 streaming enters when pages arrive continuously (a live fetcher writing
 parquet).  This module gives that path: a file-source stream over the
-pages directory, watermarked event-time windowed per-host counts (the
-streaming analog of the lineage counters), written with exactly-once file
-sinks + checkpoints — the Structured-Streaming mirror of the engine's
-atomic round commits.
+pages directory (:func:`read_pages_stream`) and watermarked event-time
+windowed per-host counts (:func:`host_window_counts`, the streaming
+analog of the lineage counters).  A caller writes them with an
+exactly-once file sink + checkpoint (``writeStream`` in append mode) —
+the Structured-Streaming mirror of the engine's atomic round commits.
 """
 
 from __future__ import annotations
@@ -127,25 +128,6 @@ def streaming_wet_preprocess(
     # dedup is the batch sweep's job).
     return kept.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
         ["digest"]
-    )
-
-
-def start_ingest(
-    spark: SparkSession,
-    src_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    window: str = "1 hour",
-):
-    """Start the windowed ingest query (append mode, exactly-once sink)."""
-    stream = read_pages_stream(spark, src_path)
-    counts = host_window_counts(stream, window=window)
-    return (
-        counts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
     )
 
 
